@@ -189,10 +189,11 @@ object Bench {
     val bySlowest = results.sortBy(-_._2).map { case (k, v) =>
       JsonStr.q(k) + ":" + (if (v < 0) "-1" else f3(v))
     }
-    val picked = bySlowest.foldLeft(List.empty[String]) { (acc, it) =>
-      if (fixedLen + acc.map(_.length + 1).sum + it.length <= 1700) it :: acc
-      else acc
-    }.reverse
+    // slowest first, up to the first entry whose running line length
+    // (","-joined) passes the budget — no faster query displaces a slower one
+    val picked = bySlowest
+      .zip(bySlowest.scanLeft(fixedLen - 1)(_ + _.length + 1).tail)
+      .takeWhile(_._2 <= 1700).map(_._1)
     println(summaryBase._1 + picked.mkString(",") + summaryBase._2)
     spark.stop()
     if (failed > 0 || ingest.isEmpty || routed.isEmpty || routedMismatch)

@@ -49,7 +49,7 @@ object BloomMicroBench {
     def anti(): Long =
       corpus.join(block, corpus("k") === block("bad"), "left_anti").count()
     def bloom(): Long =
-      graft.ops.BloomExclusion.excludeKeys(corpus, "k", block, "bad").count()
+      graft.operators.BloomExclusion.excludeKeys(corpus, "k", block, "bad").count()
 
     // verify equal, then warm both paths once and keep the min of two
     val expect = anti()

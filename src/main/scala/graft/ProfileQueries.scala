@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -73,8 +73,8 @@ object ProfileQueries {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(120)
+        // listener events are async; wait until every one is delivered
+        GraftShim.drainListenerBus(spark)
         println(f"$name%-28s pass$i $dt%8.3f s  jobs=${jobs.get}%-3d " +
           f"stages=${stages.get}%-3d tasks=${tasks.get}%-5d " +
           f"shufR=${shuffleRead.get / 1024}%dK shufW=${shuffleWrite.get / 1024}%dK")

@@ -4079,19 +4079,9 @@ class GraftClient(spark: SparkSession, root: String,
     require(ef == 0 || ef >= offset + k,
       s"ef ($ef) must be >= offset + k (${offset + k}) — Milvus requires " +
         "ef >= limit the same way")
-    // Milvus accepts consistency_level on search too. Vector search
-    // always RESOLVES Strong here (at-rest index layouts exist only at
-    // their latest version — ConsistencyLevels documents the refusal to
-    // trade the index for staleness), which is sound for every level:
-    // serving FRESHER data than requested is within any level's
-    // contract. What the parameter still buys is Session's floor
-    // assertion — a search on a rolled-back store raises instead of
-    // silently serving pre-write state.
-    if (effectiveLevel(m, consistencyLevel) == "Session")
-      resolveParts(m, partitions).foreach { p =>
-        val pm = partMeta(m, p)
-        pinForRead(pm, collection(pm), "Session")
-      }
+    // Milvus accepts consistency_level on search too (ConsistencyLevels
+    // documents the refusal to trade the index for staleness)
+    sessionFloor(m, partitions, consistencyLevel)
     require(qvec.length == m.dim,
       s"query dimension ${qvec.length} != collection dimension ${m.dim}")
     require(k >= 1, s"k must be >= 1 (got $k)") // Milvus errors on
@@ -4146,9 +4136,22 @@ class GraftClient(spark: SparkSession, root: String,
           ef = ef)
       }
       .reduce(_ unionByName _)
-    projectOutputFields(paged(scored, offset, k), outputFields,
-      vecFields = m.extraVecFields.map(_.name).toSet)
+    projectOutputFields(paged(scored, GraftClient.FloatFamily, offset, k),
+      outputFields, vecFields = m.extraVecFields.map(_.name).toSet)
   }
+
+  /** Vector search always RESOLVES Strong (at-rest index layouts exist
+    * only at their latest version), which is within every level's
+    * contract; what `consistency_level` still buys a search is Session's
+    * covers-own-writes floor — a search on a rolled-back store raises
+    * instead of silently serving pre-write state. */
+  private def sessionFloor(m: CollectionMeta, partitions: Seq[String],
+      consistencyLevel: String): Unit =
+    if (effectiveLevel(m, consistencyLevel) == "Session")
+      resolveParts(m, partitions).foreach { p =>
+        val pm = partMeta(m, p)
+        pinForRead(pm, collection(pm), "Session")
+      }
 
   /** Milvus `output_fields` over a (vector_key, distance, metadata)
     * result: `vector_key` and `distance` always ship (Milvus always
@@ -4219,18 +4222,8 @@ class GraftClient(spark: SparkSession, root: String,
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — searchBinary " +
         "serves BINARY_VECTOR; use search for float vectors")
-    // same contract as the float search(): vector search always RESOLVES
-    // Strong (at-rest index layouts exist only at their latest version),
-    // which is within every level's contract; the parameter still buys
-    // Session's covers-own-writes floor assertion
-    if (effectiveLevel(m, consistencyLevel) == "Session")
-      resolveParts(m, partitions).foreach { p =>
-        val pm = partMeta(m, p)
-        pinForRead(pm, collection(pm), "Session")
-      }
-    require(q.length == binWords(m.dim),
-      s"query needs ${binWords(m.dim)} packed 64-bit words for " +
-        s"dim ${m.dim} bits (got ${q.length})")
+    sessionFloor(m, partitions, consistencyLevel)
+    requireBinQuery(m, q)
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
     require(offset >= 0, s"offset must be >= 0 (got $offset)")
@@ -4250,7 +4243,8 @@ class GraftClient(spark: SparkSession, root: String,
             Seq("vector_key"), "left_semi"))
       }
       .reduce(_ unionByName _)
-    projectOutputFields(paged(scored, offset, k), outputFields)
+    projectOutputFields(paged(scored, GraftClient.BinaryFamily, offset, k),
+      outputFields)
   }
 
   /** One-call Milvus `search` on a BINARY_VECTOR collection with the
@@ -4274,8 +4268,6 @@ class GraftClient(spark: SparkSession, root: String,
       consistencyLevel = consistencyLevel, matchGates = gates, field = field)
   }
 
-  /** One partition's scored binary candidates — [[scoredCandidates]]'s
-    * role for the packed-words family. */
   /** Milvus grouping search on a BINARY_VECTOR field —
     * `group_by_field`/`group_size` with [[searchGrouped]]'s exact
     * semantics and shape: top-`k` DISTINCT groups by their best
@@ -4295,61 +4287,45 @@ class GraftClient(spark: SparkSession, root: String,
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — searchBinaryGrouped " +
         "serves BINARY_VECTOR; use searchGrouped/searchSparseGrouped")
-    require(q.length == binWords(m.dim),
-      s"query needs ${binWords(m.dim)} packed 64-bit words for " +
-        s"dim ${m.dim} bits (got ${q.length})")
+    requireBinQuery(m, q)
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(groupSize >= 1, s"groupSize must be >= 1 (got $groupSize)")
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
-    val cand = resolveParts(m, partitions)
+    val scored = resolveParts(m, partitions)
       .map(p => binScored(partMeta(m, p), q, withTtl(m, filter), nprobe))
       .reduce(_ unionByName _)
-      .withColumn("__grp", element_at(col("metadata"), lit(groupByKey)))
-      .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"), col("distance"),
-        col("vector_key").as("key"), col("metadata").as("meta"))
-      // both passes consume this frame — lazy checkpoint (pass 1's
-      // collect materializes; pass 2 reads the cache; the fetchDf
-      // lifecycle stance on the blocks)
-      .localCheckpoint(false)
-    val bests = cand.groupBy(col("group_value"))
-      .agg(min(col("distance")).as("__best"))
-      .orderBy(col("__best"), col("group_value"))
-      .limit(k)
-      .collect()
-    import spark.implicits._
-    val ranks = bests.zipWithIndex.toSeq
-      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
-      .toDF("group_value", "grp_rank")
-    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
-    cand.join(broadcast(ranks), Seq("group_value"))
-      .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(col("distance"), col("key"), col("meta")).as("tops"))
-      .select(col("group_value"), col("grp_rank"),
-        posexplode(col("tops")).as(Seq("pos", "hit")))
-      .select(col("group_value"), col("grp_rank"),
-        (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), col("hit.dist").as("distance"),
-        col("hit.meta").as("metadata"))
-      .orderBy(col("grp_rank"), col("rn"))
+    groupedTop(scored, GraftClient.BinaryFamily, groupByKey, k, groupSize)
   }
 
+  /** The packed-words query boundary every single-query binary surface
+    * shares (the batch form checks the same length row-wise). */
+  private def requireBinQuery(m: CollectionMeta, q: Array[Long]): Unit =
+    require(q.length == binWords(m.dim),
+      s"query needs ${binWords(m.dim)} packed 64-bit words for " +
+        s"dim ${m.dim} bits (got ${q.length})")
+
+  /** The binary family's distance of the stored `vec` codes to `q` (a
+    * literal, or the batch's per-row codes): exact Hamming (small ints,
+    * cast double for the shared result envelope) or Jaccard. Parquet
+    * read-back types the words as NULLABLE elements, which the fused
+    * kernels refuse (a null word would silently read as 0) — the
+    * coalesce-transform re-establishes the non-null element type the
+    * write boundary enforced (no row ever carries one). */
+  private def binDistance(metric: String, q: Column): Column = {
+    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
+    metric match {
+      case "hamming" =>
+        graft.functions.BinaryVectorFunctions.hamming_distance(codes, q)
+          .cast("double")
+      case _ => graft.functions.BinaryVectorFunctions.jaccard_distance(codes, q)
+    }
+  }
+
+  /** One partition's scored binary candidates — [[scoredCandidates]]'s
+    * role for the packed-words family. */
   private def binScored(pm: CollectionMeta, q: Array[Long],
       filter: Option[Column], nprobe: Int): DataFrame = {
     val coll = collection(pm)
-    // parquet read-back types the words as NULLABLE elements, which the
-    // fused kernels refuse (a null word would silently read as 0) — the
-    // coalesce-transform re-establishes the non-null element type the
-    // write boundary enforced (no row ever carries one)
-    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-    val dist = pm.metric match {
-      case "hamming" =>
-        graft.functions.BinaryVectorFunctions
-          .hamming_distance(codes, typedLit(q)).cast("double")
-      case _ =>
-        graft.functions.BinaryVectorFunctions
-          .jaccard_distance(codes, typedLit(q))
-    }
     val base = loadBinIndex(pm)
         .filter { case (_, v) => coll.currentVersion.contains(v) } match {
       case Some((quant, v)) =>
@@ -4360,7 +4336,8 @@ class GraftClient(spark: SparkSession, root: String,
       case None => scalarPrunedRead(pm, coll, filter)
     }
     filter.fold(base)(base.filter)
-      .select(col("key").as("vector_key"), dist.as("distance"),
+      .select(col("key").as("vector_key"),
+        binDistance(pm.metric, typedLit(q)).as("distance"),
         col("meta").as("metadata"))
   }
 
@@ -4389,9 +4366,7 @@ class GraftClient(spark: SparkSession, root: String,
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — searchBinaryRange " +
         "serves BINARY_VECTOR; use searchRange for float vectors")
-    require(q.length == binWords(m.dim),
-      s"query needs ${binWords(m.dim)} packed 64-bit words for " +
-        s"dim ${m.dim} bits (got ${q.length})")
+    requireBinQuery(m, q)
     require(rangeFilter < radius,
       s"rangeFilter ($rangeFilter) must be < radius ($radius) — " +
         "the band is [rangeFilter, radius)")
@@ -4421,17 +4396,9 @@ class GraftClient(spark: SparkSession, root: String,
           }
         case _ => scalarPrunedRead(pm, coll, tFilter)
       }
-      val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-      val dist = pm.metric match {
-        case "hamming" =>
-          graft.functions.BinaryVectorFunctions
-            .hamming_distance(codes, typedLit(q)).cast("double")
-        case _ =>
-          graft.functions.BinaryVectorFunctions
-            .jaccard_distance(codes, typedLit(q))
-      }
       tFilter.fold(base)(base.filter)
-        .select(col("key").as("vector_key"), dist.as("distance"),
+        .select(col("key").as("vector_key"),
+          binDistance(pm.metric, typedLit(q)).as("distance"),
           col("meta").as("metadata"))
         .filter(col("distance") < radius &&
           col("distance") >= rangeFilter)
@@ -4474,37 +4441,24 @@ class GraftClient(spark: SparkSession, root: String,
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — searchBinaryIterator " +
         "serves BINARY_VECTOR; use searchIterator for float vectors")
-    require(q.length == binWords(m.dim),
-      s"query needs ${binWords(m.dim)} packed 64-bit words for " +
-        s"dim ${m.dim} bits (got ${q.length})")
+    requireBinQuery(m, q)
     require(batchSize >= 1, s"batchSize must be >= 1 (got $batchSize)")
-    val parts = resolveParts(m, partitions).map(p => partMeta(m, p))
     // TTL cutoff pinned at drain start (one read, one clock)
     val tFilter = withTtl(m, filter)
-    // creation-time pins: snapshot version + (if fresh) quantizer/radii
-    val pins = parts.map { pm =>
-      val coll = collection(pm)
-      val pin = coll.currentVersion
+    pinnedDrain(m, partitions, GraftClient.BinaryFamily, batchSize,
+        allowDrift) { (pm, pin) =>
+      // creation-time index pin: the quantizer and radii, if fresh at pin
       val idx = loadBinIndex(pm)
         .filter { case (_, v) => pin.contains(v) && pm.metric == "hamming" }
         .map { case (quant, v) => (quant, v, readBinRadii(pm)) }
-      (pm, pin, idx)
-    }
-    def page(cursor: Option[(Double, String)]): Seq[Row] = {
-      val arms = pins.map { case (pm, pin, idx) =>
-        val coll = collection(pm)
-        val cur = coll.currentVersion
-        if (cur != pin && !allowDrift)
-          throw new IllegalStateException(s"${pm.name}: a commit landed " +
-            "mid-iteration (snapshot pinned at creation) — restart the " +
-            "iterator, or pass allowDrift = true to keep draining the " +
-            "pinned snapshot while the retain window holds it")
+      (cursor, cur, pinned) => {
         // the cell layout serves only while its stamp (== pin at
         // creation) is still CURRENT — maintenance rewrites cells in
         // place, so a moved stamp means the cells no longer equal the
         // pinned snapshot
         val base = idx match {
           case Some((quant, v, radii)) if cur.contains(v) =>
+            val coll = collection(pm)
             val cellsDf = loadedIndexFrame(coll, cellsPath(pm), v,
               () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
             (cursor, radii) match {
@@ -4517,53 +4471,12 @@ class GraftClient(spark: SparkSession, root: String,
                 else cellsDf.filter(!col("centroidId").isin(dropped: _*))
               case _ => cellsDf
             }
-          case _ => pin.fold(coll.read(spark))(v =>
-            try coll.readVersion(spark, v)
-            catch { case e: Exception => throw new IllegalStateException(
-              s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
-                s"restart the iterator (${e.getMessage})") })
+          case _ => pinned()
         }
-        val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-        val dist = pm.metric match {
-          case "hamming" =>
-            graft.functions.BinaryVectorFunctions
-              .hamming_distance(codes, typedLit(q)).cast("double")
-          case _ =>
-            graft.functions.BinaryVectorFunctions
-              .jaccard_distance(codes, typedLit(q))
-        }
-        val scored = tFilter.fold(base)(base.filter)
-          .select(col("key").as("vector_key"), dist.as("distance"),
+        tFilter.fold(base)(base.filter)
+          .select(col("key").as("vector_key"),
+            binDistance(pm.metric, typedLit(q)).as("distance"),
             col("meta").as("metadata"))
-        cursor.fold(scored) { case (d0, k0) =>
-          scored.filter(col("distance") > d0 ||
-            (col("distance") === d0 && col("vector_key") > k0))
-        }
-      }
-      arms.reduce(_ unionByName _)
-        .orderBy(col("distance"), col("vector_key"))
-        .limit(batchSize)
-        .collect().toSeq
-    }
-    new Iterator[Seq[Row]] {
-      private var cursor: Option[(Double, String)] = None
-      private var nextPage: Option[Seq[Row]] = None
-      private var exhausted = false
-      private def advance(): Unit =
-        if (!exhausted && nextPage.isEmpty) {
-          val rows = page(cursor)
-          if (rows.isEmpty) exhausted = true
-          else {
-            cursor = Some((rows.last.getDouble(1), rows.last.getString(0)))
-            nextPage = Some(rows)
-          }
-        }
-      override def hasNext: Boolean = { advance(); nextPage.isDefined }
-      override def next(): Seq[Row] = {
-        advance()
-        val out = nextPage.getOrElse(throw new NoSuchElementException)
-        nextPage = None
-        out
       }
     }
   }
@@ -4589,7 +4502,6 @@ class GraftClient(spark: SparkSession, root: String,
                         filter: Option[Column] = None, nprobe: Int = 4,
                         partitions: Seq[String] = Nil,
                         field: String = ""): DataFrame = {
-    import graft.functions.VectorAggregates
     val m = fieldMetaOpt(metaOrThrow(name), field)
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — searchBinaryBatch " +
@@ -4638,26 +4550,10 @@ class GraftClient(spark: SparkSession, root: String,
               col("meta"), col("ingest_ts"))
       }
     }.reduce(_ unionByName _)
-    // both sides re-establish non-null word types for the fused kernels
-    // (parquet read-back and caller frames may carry nullable elements)
-    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
+    // caller frames may carry nullable query words too (binDistance
+    // re-establishes the stored side)
     val qc = transform(col("qcodes"), w => coalesce(w, lit(0L)))
-    val dist = m.metric match {
-      case "hamming" =>
-        graft.functions.BinaryVectorFunctions
-          .hamming_distance(codes, qc).cast("double")
-      case _ =>
-        graft.functions.BinaryVectorFunctions.jaccard_distance(codes, qc)
-    }
-    tFilter.fold(candidates)(candidates.filter)
-      .select(col("qid"), dist.as("dist"), col("key"), col("meta"))
-      .groupBy(col("qid"))
-      .agg(VectorAggregates.topKDocs(k)(col("dist"), col("key"), col("meta"))
-        .as("hits"))
-      .select(col("qid"), explode(col("hits")).as("h"))
-      .select(col("qid"), col("h.key").as("vector_key"),
-        col("h.dist").as("distance"), col("h.meta").as("metadata"))
-      .orderBy(col("qid"), col("distance"), col("vector_key"))
+    perQueryTop(candidates, tFilter, binDistance(m.metric, qc), k)
   }
 
   /** One partition's scored candidate stream for [[search]]:
@@ -4835,36 +4731,105 @@ class GraftClient(spark: SparkSession, root: String,
 
   /** The metric-dependent "smaller is better" score [[search]] and its
     * siblings rank by: L2 distance, negated cosine similarity, negated
-    * inner product — one convention across every search surface. */
-  private def distanceCol(metric: String, qvec: Array[Float]): Column = {
-    val q = typedLit(qvec)
-    metric match {
-      case "l2" => l2_distance(col("vec"), q)
-      case "cosine" => -cosine_similarity(col("vec"), q)
-      case "dot" => -dot_product(col("vec"), q)
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
+    * inner product — one convention across every search surface. `q` is
+    * the query: a literal, or [[searchBatch]]'s per-row `qvec`. */
+  private def distanceCol(metric: String, q: Column): Column = metric match {
+    case "l2" => l2_distance(col("vec"), q)
+    case "cosine" => -cosine_similarity(col("vec"), q)
+    case "dot" => -dot_product(col("vec"), q)
+    case other => throw new IllegalArgumentException(s"unknown metric $other")
   }
+  private def distanceCol(metric: String, qvec: Array[Float]): Column =
+    distanceCol(metric, typedLit(qvec))
 
-  /** Milvus `offset` pagination over a (vector_key, distance, metadata)
-    * result: top-(offset+k) stays pushed into TakeOrderedAndProject
-    * (every partition bounds to offset+k rows, k-way driver merge — no
-    * full sort at any offset), then a row-number window over the
-    * ≤ offset+k survivors drops the first page. Deep pagination costs
-    * O(offset+k) memory by construction — the same bound Milvus imposes
-    * by capping offset+limit. */
-  private def paged(scored: DataFrame, offset: Int, k: Int): DataFrame = {
-    val ordered = scored.orderBy(col("distance"), col("vector_key"))
+  /** Milvus `offset` pagination over a (vector_key, rank, metadata)
+    * result, best first in the family's order: top-(offset+k) stays
+    * pushed into TakeOrderedAndProject (every partition bounds to
+    * offset+k rows, k-way driver merge — no full sort at any offset),
+    * then a row-number window over the ≤ offset+k survivors drops the
+    * first page. Deep pagination costs O(offset+k) memory by
+    * construction — the same bound Milvus imposes by capping
+    * offset+limit. */
+  private def paged(scored: DataFrame, family: GraftClient.Family,
+      offset: Int, k: Int): DataFrame = {
+    val order = family.resultOrder
+    val ordered = scored.orderBy(order: _*)
     if (offset <= 0) ordered.limit(k)
     else {
       import org.apache.spark.sql.expressions.Window
       ordered.limit(offset + k)
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(col("distance"), col("vector_key"))))
+        .withColumn("__rn", row_number().over(Window.orderBy(order: _*)))
         .filter(col("__rn") > offset).drop("__rn")
-        .orderBy(col("distance"), col("vector_key"))
+        .orderBy(order: _*)
     }
   }
+
+  /** Milvus grouping search's two-pass tail, shared by every family:
+    * `scored` is the (vector_key, rank, metadata) candidate union. Pass 1
+    * ranks the top-`k` DISTINCT groups by their best hit; the ordering
+    * key (best, group_value) is unique per group, so the k-row
+    * TakeOrdered + driver-side index assignment is a deterministic dense
+    * ranking (ties in best break on group_value, every rank distinct).
+    * Pass 2 broadcasts the k winners UNDER the per-group bounded
+    * top-`groupSize` heap: candidates of losing groups drop map-side at
+    * the broadcast hash join, so the heap only ever aggregates k groups.
+    * The heap keeps the SMALLEST keys, so a descending family rides the
+    * negated rank (exact for doubles). Emits (group_value, grp_rank, rn,
+    * vector_key, rank, metadata). */
+  private def groupedTop(scored: DataFrame, family: GraftClient.Family,
+      groupByKey: String, k: Int, groupSize: Int): DataFrame = {
+    val rank = col(family.rankCol)
+    val grouped = scored
+      .withColumn("__grp", element_at(col("metadata"), lit(groupByKey)))
+      .filter(col("__grp").isNotNull)
+      .select(col("__grp").as("group_value"), rank,
+        col("vector_key").as("key"), col("metadata").as("meta"))
+    // both passes consume this frame — a lazy checkpoint (pass 1's
+    // collect materializes; pass 2 reads the blocks, which live until the
+    // caller drops the result — the fetchDf lifecycle stance)
+    val cand = if (family.checkpointGrouped) grouped.localCheckpoint(false)
+      else grouped
+    val bests = cand.groupBy(col("group_value"))
+      .agg((if (family.ascending) min(rank) else max(rank)).as("__best"))
+      .orderBy(family.order(col("__best")), col("group_value"))
+      .limit(k)
+      .collect()
+    import spark.implicits._
+    val ranks = bests.zipWithIndex.toSeq
+      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
+      .toDF("group_value", "grp_rank")
+    val heapKey = if (family.ascending) rank else -rank
+    val hitRank = if (family.ascending) col("hit.dist") else -col("hit.dist")
+    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
+    cand.join(broadcast(ranks), Seq("group_value"))
+      .groupBy(col("group_value"), col("grp_rank"))
+      .agg(topk(heapKey, col("key"), col("meta")).as("tops"))
+      .select(col("group_value"), col("grp_rank"),
+        posexplode(col("tops")).as(Seq("pos", "hit")))
+      .select(col("group_value"), col("grp_rank"),
+        (col("pos") + 1).cast("long").as("rn"),
+        col("hit.key").as("vector_key"), hitRank.as(family.rankCol),
+        col("hit.meta").as("metadata"))
+      .orderBy(col("grp_rank"), col("rn"))
+  }
+
+  /** Batched top-k's per-query tail for the distance families:
+    * `candidates` carries (qid, key, vec, meta, …) with `dist` scoring
+    * each pair; the bounded-heap [[graft.functions.VectorAggregates.topKDocs]]
+    * keeps k rows per (partition, qid) BEFORE the one shuffle. Emits
+    * (qid, vector_key, distance, metadata), (distance, key)-ordered per
+    * qid. */
+  private def perQueryTop(candidates: DataFrame, filter: Option[Column],
+      dist: Column, k: Int): DataFrame =
+    filter.fold(candidates)(candidates.filter)
+      .select(col("qid"), dist.as("dist"), col("key"), col("meta"))
+      .groupBy(col("qid"))
+      .agg(graft.functions.VectorAggregates.topKDocs(k)(col("dist"),
+        col("key"), col("meta")).as("hits"))
+      .select(col("qid"), explode(col("hits")).as("h"))
+      .select(col("qid"), col("h.key").as("vector_key"),
+        col("h.dist").as("distance"), col("h.meta").as("metadata"))
+      .orderBy(col("qid"), col("distance"), col("vector_key"))
 
   /** The IVF_SQ8 two-stage search (FAISS/Milvus `IVF_SQ8` semantics —
     * the reference backend's `index_type` config sibling of IVF_FLAT,
@@ -5383,8 +5348,7 @@ class GraftClient(spark: SparkSession, root: String,
               filled < k
             }) { mult *= 4; arm = walk(mult); tries += 1 }
           }
-          arm.select(col("vector_key").as("key"), col("distance"),
-            col("metadata").as("meta"))
+          arm.select(col("vector_key"), col("distance"), col("metadata"))
         case None =>
           // filter + TTL gate bind BEFORE the projection (the gate's
           // ingest_ts lives on the cells layout / store scan)
@@ -5395,43 +5359,12 @@ class GraftClient(spark: SparkSession, root: String,
             GraftClient.KeepCells(idx.probe.probes(qa, nprobe))
           }
           tFilter.fold(arm)(arm.filter)
-            .select(col("key"), distanceCol(m.metric, qvec).as("distance"),
-              col("meta"))
+            .select(col("key").as("vector_key"),
+              distanceCol(m.metric, qvec).as("distance"),
+              col("meta").as("metadata"))
       }
     }.reduce(_ unionByName _)
-    val cand = base
-      .withColumn("__grp", element_at(col("meta"), lit(groupByKey)))
-      .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"),
-        col("distance"), col("key"), col("meta"))
-    // pass 1 — top-k groups by best hit. Deterministic ranking: the
-    // ordering key (__best, group_value) is unique per group, so the
-    // k-row TakeOrdered + driver-side index assignment reproduces the
-    // previous dense_rank semantics exactly (ties in __best break on
-    // group_value, every rank distinct).
-    val bests = cand.groupBy(col("group_value"))
-      .agg(min(col("distance")).as("__best"))
-      .orderBy(col("__best"), col("group_value"))
-      .limit(k)
-      .collect()
-    import spark.implicits._
-    val ranks = bests.zipWithIndex.toSeq
-      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
-      .toDF("group_value", "grp_rank")
-    // pass 2 — broadcast the k winners UNDER the heap agg: candidates of
-    // losing groups are dropped map-side by the broadcast hash join, so
-    // the per-group top-`groupSize` heap only ever aggregates k groups
-    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
-    cand.join(broadcast(ranks), Seq("group_value"))
-      .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(col("distance"), col("key"), col("meta")).as("tops"))
-      .select(col("group_value"), col("grp_rank"),
-        posexplode(col("tops")).as(Seq("pos", "hit")))
-      .select(col("group_value"), col("grp_rank"),
-        (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), col("hit.dist").as("distance"),
-        col("hit.meta").as("metadata"))
-      .orderBy(col("grp_rank"), col("rn"))
+    groupedTop(base, GraftClient.FloatFamily, groupByKey, k, groupSize)
   }
 
   /** Point lookup by primary key — Milvus `client.get(ids)`: (key, vec,
@@ -5779,35 +5712,25 @@ class GraftClient(spark: SparkSession, root: String,
         pqDrainAt(p)))
       mergedDrainIterator(m, parts, gates, qvec, fOpt, nprobe, refine,
         batchSize, allowDrift, liveAt, pqDrainAt)
-    else {
-    var cursor: Option[(Double, String)] = None
-    pagedIterator(m, parts, allowDrift, batchSize) { () =>
-      val scored = parts.zip(gates)
-        .map { case (p, gate) =>
-          val pm = partMeta(m, p)
-          scoredCandidates(pm, qvec, fOpt, nprobe,
-            refine, batchSize,
-            cursorDist = cursor.map(_._1), // deep pages skip cells the
-                                           // cursor has fully passed
-            gate = gate, // drain-start-pinned TEXT_MATCH key set (above)
-            pinnedNoIndex = !liveAt(p),
-            // an IVF_PQ partition on THIS path is not margin-drainable
-            // (legacy index without pq_recon bounds, vec-referencing
-            // filter, or stale) — it drains the FLOAT cells, the layout
-            // every IVF type keeps; indexType is immutable, no TOCTOU
-            forceCellScan = pm.indexType == "IVF_PQ")
-        }
-        .reduce(_ unionByName _)
-      val after = cursor.fold(scored) { case (d, k0) =>
-        scored.filter(col("distance") > d ||
-          (col("distance") === d && col("vector_key") > k0))
-      }
-      val rows = after.orderBy(col("distance"), col("vector_key"))
-        .limit(batchSize).collect().toSeq
-      rows.lastOption.foreach(r => cursor = Some((r.getDouble(1), r.getString(0))))
-      rows
-    }
-    }
+    else pagedIterator(m, parts, allowDrift, batchSize)(
+      keysetPages(GraftClient.FloatFamily, batchSize) { cursor =>
+        parts.zip(gates)
+          .map { case (p, gate) =>
+            val pm = partMeta(m, p)
+            scoredCandidates(pm, qvec, fOpt, nprobe,
+              refine, batchSize,
+              cursorDist = cursor.map(_._1), // deep pages skip cells the
+                                             // cursor has fully passed
+              gate = gate, // drain-start-pinned TEXT_MATCH key set (above)
+              pinnedNoIndex = !liveAt(p),
+              // an IVF_PQ partition on THIS path is not margin-drainable
+              // (legacy index without pq_recon bounds, vec-referencing
+              // filter, or stale) — it drains the FLOAT cells, the layout
+              // every IVF type keeps; indexType is immutable, no TOCTOU
+              forceCellScan = pm.indexType == "IVF_PQ")
+          }
+          .reduce(_ unionByName _)
+      })
   }
 
   /** The unbounded-drain engine behind [[searchIterator]] when an
@@ -5866,21 +5789,16 @@ class GraftClient(spark: SparkSession, root: String,
       // hadLiveIndex comes from the creation-time liveAt map — the ONE
       // evaluation the dispatch also used (see searchIterator); a fresh
       // liveIndex call here would reopen the dispatch-vs-pin race
-      private var cursor: Option[(Double, String)] = None
+      private val nextChunk = keysetPages(GraftClient.FloatFamily, chunk) {
+        cursor =>
+          scoredCandidates(pm, qvec, filter, nprobe, refine, chunk,
+            cursorDist = cursor.map(_._1), gate = gate,
+            pinnedNoIndex = !hadLiveIndex,
+            forceCellScan = pm.indexType == "IVF_PQ") // see searchIterator
+      }
       override protected def refill(): Unit = {
-        val scored = scoredCandidates(pm, qvec, filter, nprobe, refine, chunk,
-          cursorDist = cursor.map(_._1), gate = gate,
-          pinnedNoIndex = !hadLiveIndex,
-          forceCellScan = pm.indexType == "IVF_PQ") // see searchIterator
-        val after = cursor.fold(scored) { case (d, k0) =>
-          scored.filter(col("distance") > d ||
-            (col("distance") === d && col("vector_key") > k0))
-        }
-        val rows = after.orderBy(col("distance"), col("vector_key"))
-          .limit(chunk).collect()
+        val rows = nextChunk()
         if (rows.length < chunk) srcDone = true
-        rows.lastOption.foreach(r =>
-          cursor = Some((r.getDouble(1), r.getString(0))))
         rows.foreach(r => buf.enqueue(((r.getDouble(1), r.getString(0)), r)))
       }
     }
@@ -6140,29 +6058,19 @@ class GraftClient(spark: SparkSession, root: String,
     }
   }
 
-  /** Shared scaffold for the two cursor surfaces: the prefetching
-    * hasNext/next state machine (short page ⇒ drained), with the
-    * per-page snapshot-pin check ahead of every fetch — ONE copy, so a
-    * fix to either rule cannot silently miss the other iterator. Pins
-    * are captured here, at iterator creation. */
-  private def pagedIterator(m: CollectionMeta, parts: Seq[String],
-      allowDrift: Boolean, batchSize: Int)(
-      fetchPage: () => Seq[Row]): Iterator[Seq[Row]] = {
-    val pinned: Seq[(String, Option[Long])] =
-      parts.map(p => p -> collection(partMeta(m, p)).currentVersion)
+  /** The prefetching hasNext/next state machine every cursor surface
+    * shares (float, binary and sparse search iterators, the query
+    * iterator): a short page means drained, so a drained iterator never
+    * fetches again — a commit landing after its last row was served
+    * cannot fail it. */
+  private def cursorIterator(batchSize: Int)(
+      fetchPage: () => Seq[Row]): Iterator[Seq[Row]] =
     new Iterator[Seq[Row]] {
       private var pending: Seq[Row] = null
       private var exhausted = false
 
       override def hasNext: Boolean = {
         if (pending == null && !exhausted) {
-          if (!allowDrift) pinned.foreach { case (p, v0) =>
-            val now = collection(partMeta(m, p)).currentVersion
-            if (now != v0) throw new java.util.ConcurrentModificationException(
-              s"collection '${m.name}' partition '$p' advanced from version $v0 " +
-                s"to $now mid-iteration — restart the iterator, or pass " +
-                "allowDrift = true to accept pages from mixed snapshots")
-          }
           val rows = fetchPage()
           if (rows.length < batchSize) exhausted = true // short page: drained
           if (rows.nonEmpty) pending = rows
@@ -6175,6 +6083,85 @@ class GraftClient(spark: SparkSession, root: String,
         val out = pending; pending = null; out
       }
     }
+
+  /** A strict (rank, vector_key) keyset cursor over a family's ranked
+    * (vector_key, rank, metadata) frames: each call pages `scoredAt(cursor)`
+    * strictly after the last row served, best first — one bounded
+    * TakeOrderedAndProject job at any depth, so page boundaries can
+    * neither repeat nor drop a row. */
+  private def keysetPages(family: GraftClient.Family, batchSize: Int)(
+      scoredAt: Option[(Double, String)] => DataFrame): () => Seq[Row] = {
+    var cursor: Option[(Double, String)] = None
+    () => {
+      val scored = scoredAt(cursor)
+      val rank = col(family.rankCol)
+      val after = cursor.fold(scored) { case (r0, k0) =>
+        scored.filter((if (family.ascending) rank > r0 else rank < r0) ||
+          (rank === r0 && col("vector_key") > k0))
+      }
+      val rows = after.orderBy(family.resultOrder: _*)
+        .limit(batchSize).collect().toSeq
+      rows.lastOption.foreach(r => cursor = Some((r.getDouble(1), r.getString(0))))
+      rows
+    }
+  }
+
+  /** The float and query iterators' snapshot contract: each partition's
+    * version is pinned here, at creation, and checked ahead of every
+    * fetch — a mid-iteration commit raises ConcurrentModificationException
+    * unless `allowDrift`, under which pages read the CURRENT snapshot. */
+  private def pagedIterator(m: CollectionMeta, parts: Seq[String],
+      allowDrift: Boolean, batchSize: Int)(
+      fetchPage: () => Seq[Row]): Iterator[Seq[Row]] = {
+    val pinned: Seq[(String, Option[Long])] =
+      parts.map(p => p -> collection(partMeta(m, p)).currentVersion)
+    cursorIterator(batchSize) { () =>
+      if (!allowDrift) pinned.foreach { case (p, v0) =>
+        val now = collection(partMeta(m, p)).currentVersion
+        if (now != v0) throw new java.util.ConcurrentModificationException(
+          s"collection '${m.name}' partition '$p' advanced from version $v0 " +
+            s"to $now mid-iteration — restart the iterator, or pass " +
+            "allowDrift = true to accept pages from mixed snapshots")
+      }
+      fetchPage()
+    }
+  }
+
+  /** The binary and sparse drains' snapshot contract: each partition's
+    * version is pinned at creation, and a commit landing mid-drain
+    * raises IllegalStateException on the next page unless `allowDrift`,
+    * under which pages keep reading the PINNED snapshot while the retain
+    * window holds it (a vacuumed pin fails the page loudly). `armAt(pm,
+    * pin)` runs once per partition at creation and returns its per-page
+    * arm: given the cursor, the current version and the pinned-snapshot
+    * read, the partition's (vector_key, rank, metadata) frame. Pages
+    * follow the family's keyset cursor over the arms' union. */
+  private def pinnedDrain(m: CollectionMeta, partitions: Seq[String],
+      family: GraftClient.Family, batchSize: Int, allowDrift: Boolean)(
+      armAt: (CollectionMeta, Option[Long]) =>
+        (Option[(Double, String)], Option[Long], () => DataFrame) => DataFrame
+  ): Iterator[Seq[Row]] = {
+    val arms = resolveParts(m, partitions).map { p =>
+      val pm = partMeta(m, p)
+      val pin = collection(pm).currentVersion
+      (pm, pin, armAt(pm, pin))
+    }
+    cursorIterator(batchSize)(keysetPages(family, batchSize) { cursor =>
+      arms.map { case (pm, pin, arm) =>
+        val coll = collection(pm)
+        val cur = coll.currentVersion
+        if (cur != pin && !allowDrift)
+          throw new IllegalStateException(s"${pm.name}: a commit landed " +
+            "mid-iteration (snapshot pinned at creation) — restart the " +
+            "iterator, or pass allowDrift = true to keep draining the " +
+            "pinned snapshot while the retain window holds it")
+        arm(cursor, cur, () => pin.fold(coll.read(spark))(v =>
+          try coll.readVersion(spark, v)
+          catch { case e: Exception => throw new IllegalStateException(
+            s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
+              s"restart the iterator (${e.getMessage})") }))
+      }.reduce(_ unionByName _)
+    })
   }
 
   /** Milvus `query_iterator`: scalar iteration over every row matching
@@ -6395,7 +6382,6 @@ class GraftClient(spark: SparkSession, root: String,
                   partitions: Seq[String] = Nil,
                   ef: Int = 0,
                   field: String = ""): DataFrame = {
-    import graft.functions.VectorAggregates
     val m = fieldMetaOpt(metaOrThrow(name), field)
     requireFloatVec(m, "searchBatch")
     require(k >= 1, s"k must be >= 1 (got $k)")
@@ -6427,20 +6413,7 @@ class GraftClient(spark: SparkSession, root: String,
       val pm = partMeta(m, part)
       batchCandidates(pm, q, nQ, k, tFilter, nprobe, refine, forceExact, ef)
     }.reduce(_ unionByName _)
-    val scored = m.metric match {
-      case "l2" => l2_distance(col("vec"), col("qvec"))
-      case "cosine" => -cosine_similarity(col("vec"), col("qvec"))
-      case "dot" => -dot_product(col("vec"), col("qvec"))
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
-    tFilter.fold(candidates)(candidates.filter)
-      .select(col("qid"), scored.as("dist"), col("key"), col("meta"))
-      .groupBy(col("qid"))
-      .agg(VectorAggregates.topKDocs(k)(col("dist"), col("key"), col("meta")).as("hits"))
-      .select(col("qid"), explode(col("hits")).as("h"))
-      .select(col("qid"), col("h.key").as("vector_key"),
-        col("h.dist").as("distance"), col("h.meta").as("metadata"))
-      .orderBy(col("qid"), col("distance"), col("vector_key"))
+    perQueryTop(candidates, tFilter, distanceCol(m.metric, col("qvec")), k)
   }
 
   /** One partition's (qid, qvec, key, vec, meta) candidate stream for
@@ -8370,24 +8343,32 @@ class GraftClient(spark: SparkSession, root: String,
         val passing = scalarPrunedRead(m, collection(m), Some(f),
             pin = readVersionFile(dir))
           .filter(f).select("key")
-        var pool = math.min(k.toLong * 4, GraftClient.MaxPageDepth).toInt
-        while (true) {
-          val hits = fetch(pool).persist()
-          try {
-            val gated = hits.join(passing, Seq("key"), "left_semi")
-              .orderBy(desc("score"), col("key"))
-              .limit(k)
-            val survivors = gated.count()
-            // done when k survivors exist, the index is exhausted (the
-            // pool came back short), or the depth cap is reached
-            if (survivors >= k || hits.count() < pool ||
-                pool >= GraftClient.MaxPageDepth)
-              return gated.localCheckpoint() // detach from the persist
-            pool = math.min(pool.toLong * 4, GraftClient.MaxPageDepth).toInt
-          } finally hits.unpersist()
-        }
-        throw new IllegalStateException("unreachable")
+        deepenGated(k, passing)(fetch)
     }
+  }
+
+  /** The top-`depth` of a sparse index's (key, score) hits that pass the
+    * `passing` key set. Sparse scores are per-doc absolute, so the gate
+    * is order-preserving and the fetch DEEPENS instead of re-ranking:
+    * the pool starts at 4×depth and quadruples until `depth` survivors
+    * exist, the index is exhausted (the pool came back short), or the
+    * pool reaches [[GraftClient.MaxPageDepth]]. */
+  private def deepenGated(depth: Int, passing: DataFrame)(
+      hits: Int => DataFrame): DataFrame = {
+    var pool = math.min(depth.toLong * 4, GraftClient.MaxPageDepth).toInt
+    var out: DataFrame = null
+    while (out == null) {
+      val h = hits(pool).persist()
+      try {
+        val g = h.join(passing, Seq("key"), "left_semi")
+          .orderBy(desc("score"), col("key")).limit(depth)
+        if (g.count() >= depth || h.count() < pool ||
+            pool >= GraftClient.MaxPageDepth)
+          out = g.localCheckpoint() // detach from the persist
+        else pool = math.min(pool.toLong * 4, GraftClient.MaxPageDepth).toInt
+      } finally h.unpersist()
+    }
+    out
   }
 
   /** The SPARSE_FLOAT_VECTOR collection search — Milvus `search` on a
@@ -8438,11 +8419,7 @@ class GraftClient(spark: SparkSession, root: String,
     // TTL gate rides the passing-keys mask exactly like a metadata
     // filter (the postings keep no timestamps; the store does)
     val tFilter = withTtl(m, filter)
-    if (effectiveLevel(m, consistencyLevel) == "Session")
-      resolveParts(m, partitions).foreach { p =>
-        val pm = partMeta(m, p)
-        pinForRead(pm, collection(pm), "Session")
-      }
+    sessionFloor(m, partitions, consistencyLevel)
     // TEXT_MATCH / PHRASE_MATCH gates resolve once against the attached
     // text index (fresh required — the TEXT_MATCH precondition), then
     // semi-join both arms exactly like the float search's matchGates
@@ -8450,8 +8427,8 @@ class GraftClient(spark: SparkSession, root: String,
     val scored = resolveParts(m, partitions)
       .map(p => sparseScored(partMeta(m, p), q, tFilter, offset + k, gate))
       .reduce(_ unionByName _)
-    projectOutputFields(pagedByScore(scored, offset, k), outputFields,
-      rankCol = "score")
+    projectOutputFields(paged(scored, GraftClient.SparseFamily, offset, k),
+      outputFields, rankCol = "score")
   }
 
   /** One-call Milvus `search` on a SPARSE_FLOAT_VECTOR collection with
@@ -8495,14 +8472,6 @@ class GraftClient(spark: SparkSession, root: String,
       coll: BucketedKeyedCollection): Boolean =
     sparseServableVersion(pm, coll).isDefined
 
-  /** The sparse family's EXACT arm, shared by search/range/batch
-    * fallbacks: every overlapping doc of this partition scored straight
-    * off the stored maps — membership = shares ≥ 1 query dim (the
-    * inverted index's own result set, so index and exact answers are
-    * identical), score = Σ over the query's entries of
-    * element_at(vec, dim) · w — |q| map probes per row, all whole-stage
-    * codegen, no explode and no shuffle before whatever bound the
-    * caller applies. */
   /** The one sparse QUERY boundary every single-query surface shares
     * (the batch form enforces the same rules row-wise): non-empty,
     * unique dims, finite NONZERO weights. Zero weights are refused
@@ -8546,6 +8515,14 @@ class GraftClient(spark: SparkSession, root: String,
     (overlaps, score)
   }
 
+  /** The sparse family's EXACT arm, shared by search/range/batch
+    * fallbacks: every overlapping doc of this partition scored straight
+    * off the stored maps — membership = shares ≥ 1 query dim (the
+    * inverted index's own result set, so index and exact answers are
+    * identical), score = Σ over the query's entries of
+    * element_at(vec, dim) · w — |q| map probes per row, all whole-stage
+    * codegen, no explode and no shuffle before whatever bound the
+    * caller applies. */
   private def sparseExactScored(pm: CollectionMeta, coll: BucketedKeyedCollection,
       q: Seq[(Long, Double)], filter: Option[Column],
       gate: Option[DataFrame] = None): DataFrame = {
@@ -8588,45 +8565,11 @@ class GraftClient(spark: SparkSession, root: String,
         case ks => Some(ks.reduce((a, b) => a.join(b, Seq("key"), "left_semi")))
       }
     }
-    val gated: DataFrame = passingOpt match {
-      case None => hits(depth)
-      case Some(passing) =>
-        var pool = math.min(depth.toLong * 4, GraftClient.MaxPageDepth).toInt
-        var out: Option[DataFrame] = None
-        while (out.isEmpty) {
-          val h = hits(pool).persist()
-          try {
-            val g = h.join(passing, Seq("key"), "left_semi")
-              .orderBy(desc("score"), col("key")).limit(depth)
-            if (g.count() >= depth || h.count() < pool ||
-                pool >= GraftClient.MaxPageDepth)
-              out = Some(g.localCheckpoint()) // detach from the persist
-            else pool = math.min(pool.toLong * 4,
-              GraftClient.MaxPageDepth).toInt
-          } finally h.unpersist()
-        }
-        out.get
-    }
+    val gated = passingOpt.fold(hits(depth))(deepenGated(depth, _)(hits))
     // metadata pinned at the SERVED snapshot — see sparseServableVersion
     coll.readVersion(spark, servedAt.get).join(broadcast(gated), Seq("key"))
       .select(col("key").as("vector_key"), col("score"),
         col("meta").as("metadata"))
-  }
-
-  /** [[paged]] for similarity-scored families (higher = better): same
-    * pushed top-(offset+k) + row-number page drop, ordered by
-    * (score DESC, key). */
-  private def pagedByScore(scored: DataFrame, offset: Int, k: Int): DataFrame = {
-    val ordered = scored.orderBy(desc("score"), col("vector_key"))
-    if (offset <= 0) ordered.limit(k)
-    else {
-      import org.apache.spark.sql.expressions.Window
-      ordered.limit(offset + k)
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(desc("score"), col("vector_key"))))
-        .filter(col("__rn") > offset).drop("__rn")
-        .orderBy(desc("score"), col("vector_key"))
-    }
   }
 
   /** Sparse range search — Milvus `radius`/`range_filter` on a
@@ -8718,14 +8661,11 @@ class GraftClient(spark: SparkSession, root: String,
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(groupSize >= 1, s"groupSize must be >= 1 (got $groupSize)")
     val tFilter = withTtl(m, filter)
-    val cand = resolveParts(m, partitions).map { p =>
+    val scored = resolveParts(m, partitions).map { p =>
       val pm = partMeta(m, p)
       val coll = collection(pm)
-      val scored = sparseServableVersion(pm, coll) match {
-        case None =>
-          sparseExactScored(pm, coll, query, tFilter)
-            .select(col("vector_key").as("key"), col("score"),
-              col("metadata").as("meta"))
+      sparseServableVersion(pm, coll) match {
+        case None => sparseExactScored(pm, coll, query, tFilter)
         case Some(v) =>
           val hits = sparseHitsKeyed(SparseIndex.scores(
             spark, sparsePostingsPath(pm), query, pm.metric))
@@ -8735,45 +8675,11 @@ class GraftClient(spark: SparkSession, root: String,
           val rows = scalarPrunedRead(pm, coll, tFilter, pin = Some(v))
           tFilter.fold(rows)(rows.filter)
             .join(hits, Seq("key"))
-            .select(col("key"), col("score"), col("meta"))
+            .select(col("key").as("vector_key"), col("score"),
+              col("meta").as("metadata"))
       }
-      scored
     }.reduce(_ unionByName _)
-      .withColumn("__grp", element_at(col("meta"), lit(groupByKey)))
-      .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"), col("score"), col("key"),
-        col("meta"))
-      // BOTH passes consume this frame — checkpoint it (lazily: pass 1's
-      // collect materializes) so pass 2 reads the cached candidates
-      // instead of re-running the postings/store join (r17; the fetchDf
-      // lifecycle stance: blocks live until the caller drops the result,
-      // ContextCleaner reclaims them then)
-      .localCheckpoint(false)
-    // pass 1 — top-k groups by best (highest) score; (best, group_value)
-    // is unique per group, so the k-row TakeOrdered + driver index
-    // assignment is a deterministic dense ranking
-    val bests = cand.groupBy(col("group_value"))
-      .agg(max(col("score")).as("__best"))
-      .orderBy(desc("__best"), col("group_value"))
-      .limit(k)
-      .collect()
-    import spark.implicits._
-    val ranks = bests.zipWithIndex.toSeq
-      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
-      .toDF("group_value", "grp_rank")
-    // pass 2 — winners broadcast UNDER the per-group bounded heap
-    // ("smaller is better" heap rides the negated score)
-    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
-    cand.join(broadcast(ranks), Seq("group_value"))
-      .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(-col("score"), col("key"), col("meta")).as("tops"))
-      .select(col("group_value"), col("grp_rank"),
-        posexplode(col("tops")).as(Seq("pos", "hit")))
-      .select(col("group_value"), col("grp_rank"),
-        (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), (-col("hit.dist")).as("score"),
-        col("hit.meta").as("metadata"))
-      .orderBy(col("grp_rank"), col("rn"))
+    groupedTop(scored, GraftClient.SparseFamily, groupByKey, k, groupSize)
   }
 
   /** Milvus `search_iterator` on a SPARSE_FLOAT_VECTOR field: an
@@ -8809,56 +8715,14 @@ class GraftClient(spark: SparkSession, root: String,
     require(batchSize >= 1, s"batchSize must be >= 1 (got $batchSize)")
     // TTL cutoff pinned at drain start (one read, one clock)
     val tFilter = withTtl(m, filter)
-    val pins = resolveParts(m, partitions).map { p =>
-      val pm = partMeta(m, p)
-      (pm, collection(pm).currentVersion)
-    }
-    def page(cursor: Option[(Double, String)]): Seq[Row] = {
-      val arms = pins.map { case (pm, pin) =>
-        val coll = collection(pm)
-        if (coll.currentVersion != pin && !allowDrift)
-          throw new IllegalStateException(s"${pm.name}: a commit landed " +
-            "mid-iteration (snapshot pinned at creation) — restart the " +
-            "iterator, or pass allowDrift = true to keep draining the " +
-            "pinned snapshot while the retain window holds it")
-        val base = pin.fold(coll.read(spark))(v =>
-          try coll.readVersion(spark, v)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
-              s"restart the iterator (${e.getMessage})") })
-        val (overlaps, score) = sparseScoreExpr(pm, query)
-        val scored = tFilter.fold(base)(base.filter).filter(overlaps)
+    pinnedDrain(m, partitions, GraftClient.SparseFamily, batchSize,
+        allowDrift) { (pm, _) =>
+      val (overlaps, score) = sparseScoreExpr(pm, query)
+      (_, _, pinned) => {
+        val base = pinned()
+        tFilter.fold(base)(base.filter).filter(overlaps)
           .select(col("key").as("vector_key"), score.as("score"),
             col("meta").as("metadata"))
-        cursor.fold(scored) { case (s0, k0) =>
-          scored.filter(col("score") < s0 ||
-            (col("score") === s0 && col("vector_key") > k0))
-        }
-      }
-      arms.reduce(_ unionByName _)
-        .orderBy(desc("score"), col("vector_key"))
-        .limit(batchSize)
-        .collect().toSeq
-    }
-    new Iterator[Seq[Row]] {
-      private var cursor: Option[(Double, String)] = None
-      private var nextPage: Option[Seq[Row]] = None
-      private var exhausted = false
-      private def advance(): Unit =
-        if (!exhausted && nextPage.isEmpty) {
-          val rows = page(cursor)
-          if (rows.isEmpty) exhausted = true
-          else {
-            cursor = Some((rows.last.getDouble(1), rows.last.getString(0)))
-            nextPage = Some(rows)
-          }
-        }
-      override def hasNext: Boolean = { advance(); nextPage.isDefined }
-      override def next(): Seq[Row] = {
-        advance()
-        val out = nextPage.getOrElse(throw new NoSuchElementException)
-        nextPage = None
-        out
       }
     }
   }
@@ -9359,6 +9223,26 @@ object GraftClient {
   private[api] case object AllCells extends CellChoice
   private[api] final case class KeepCells(cells: Seq[Int]) extends CellChoice
   private[api] final case class DropCells(cells: Seq[Int]) extends CellChoice
+
+  /** What a vector family's results rank by, for the result shapes every
+    * family shares (page, grouped, drain): the rank column and its
+    * direction — distance ascending for float and binary, score
+    * descending for sparse — with `vector_key` as the tie-break.
+    * `checkpointGrouped` is the grouped search's one measured family
+    * difference: binary and sparse checkpoint the candidates both passes
+    * read, float recomputes them (r17 measured its checkpoint as a loss). */
+  private[api] final case class Family(rankCol: String, ascending: Boolean,
+      checkpointGrouped: Boolean) {
+    def order(c: Column): Column = if (ascending) c.asc else c.desc
+    /** The rank column's best-first order, then the key tie-break. */
+    def resultOrder: Seq[Column] = Seq(order(col(rankCol)), col("vector_key"))
+  }
+  private[api] val FloatFamily = Family("distance", ascending = true,
+    checkpointGrouped = false)
+  private[api] val BinaryFamily = Family("distance", ascending = true,
+    checkpointGrouped = true)
+  private[api] val SparseFamily = Family("score", ascending = false,
+    checkpointGrouped = true)
 
   // ---- SQ8-drain hold-back observability (test hook) ----
   // Peak size of the margin-drain hold-back heap since the last reset —

@@ -60,12 +60,12 @@ object TrainingExport {
     * definition shared by packed() and run()'s stats so the two can never
     * drift. The blocklist (opted-out / known-bad / eval-set doc ids) is
     * applied FIRST through the Bloom-prefiltered exclusion, so at corpus
-    * scale only Bloom hits take a join — see [[graft.ops.BloomExclusion]]. */
+    * scale only Bloom hits take a join — see [[graft.operators.BloomExclusion]]. */
   private def filtered(docs: DataFrame, cfg: Config,
                        blocklist: Option[DataFrame]): DataFrame = {
     val unblocked = blocklist match {
       case Some(bl) =>
-        graft.ops.BloomExclusion.excludeKeys(docs, "doc_id", bl, bl.columns.head)
+        graft.operators.BloomExclusion.excludeKeys(docs, "doc_id", bl, bl.columns.head)
       case None => docs
     }
     val langFiltered =

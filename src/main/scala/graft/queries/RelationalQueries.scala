@@ -114,7 +114,7 @@ object RelationalQueries {
     * key (nation) has only 25 values, so a shuffle join would put entire
     * nations on single reducers (built-in skew); broadcasting the smaller
     * side evaluates the theta predicate stream-side instead. If supplier
-    * outgrew broadcast range, the fix is salting (graft.ops.Salting), not
+    * outgrew broadcast range, the fix is salting (graft.operators.Salting), not
     * a 25-key shuffle. */
   def joinTheta(spark: SparkSession, dir: String): DataFrame = {
     val supp = t(spark, dir, "supplier")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.ops.BloomExclusion
+import graft.operators.BloomExclusion
 
 /** Bloom-prefiltered blocklist exclusion must be EXACTLY the plain
   * left_anti join — the whole point is that the no-false-negative split

@@ -94,6 +94,36 @@ class IteratorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(drifting.next().length == 10, "allowDrift pages through the commit")
   }
 
+  test("a drain that served its short last page stays drained across a " +
+       "later commit (float, binary and sparse)") {
+    import spark.implicits._
+    val client = newClient()
+    val none = Map.empty[String, String]
+    seed(client, "sd", 15)
+    client.createCollection("bd", dim = 64, metric = "hamming",
+      vectorType = "BINARY_VECTOR")
+    client.upsert("bd", (0 until 15).map(i => (f"k$i%04d", Seq(i.toLong), none))
+      .toDF("key", "vec", "meta"))
+    client.createCollection("spd", dim = 0, metric = "dot",
+      vectorType = "SPARSE_FLOAT_VECTOR")
+    client.upsert("spd", (0 until 15).map(i => (f"k$i%04d", Map(0L -> (i + 1.0)), none))
+      .toDF("key", "vec", "meta"))
+    val drains = Seq(
+      "float" -> client.searchIterator("sd", Array(0f, 0f), batchSize = 10),
+      "binary" -> client.searchBinaryIterator("bd", Array(0L), batchSize = 10),
+      "sparse" -> client.searchSparseIterator("spd", Seq(0L -> 1.0), batchSize = 10))
+    drains.foreach { case (family, it) =>
+      assert(it.next().length == 10, family)
+      assert(it.next().length == 5, s"$family: the short page serves the last rows")
+    }
+    client.upsert("sd", Seq(("zz", Seq(9f, 9f), none)).toDF("key", "vec", "meta"))
+    client.upsert("bd", Seq(("zz", Seq(7L), none)).toDF("key", "vec", "meta"))
+    client.upsert("spd", Seq(("zz", Map(0L -> 0.5), none)).toDF("key", "vec", "meta"))
+    drains.foreach { case (family, it) =>
+      assert(!it.hasNext, s"$family: a drained iterator must not fetch again")
+    }
+  }
+
   test("queryIterator with allowDrift survives commits that vacuum the creation-time snapshot") {
     import spark.implicits._
     val client = newClient()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.ops.Salting
+import graft.operators.Salting
 
 /** Equivalence tests for the skew-salting helpers: salted plans must give
   * exactly the unsalted results while spreading a hot key over reducers. */
